@@ -89,15 +89,6 @@ def _spark_ngrams(words: str, n: int) -> str:
     )
 
 
-def _spark_dup_frac(words: str, n: int) -> str:
-    ng = _spark_ngrams(words, n)
-    return (
-        f"case when size({words}) < {n} then cast(0.0 as double) else "
-        f"round(1.0 - cast(size(array_distinct({ng})) as double)"
-        f" / cast(size({ng}) as double), 6) end"
-    )
-
-
 def spark_signal_exprs(text_col: str = "text",
                        th: GopherThresholds = DEFAULT_THRESHOLDS) -> dict[str, Column]:
     """Per-document quality signals as native Column expressions.

@@ -231,9 +231,11 @@ def run_filter(
             metrics_df = wh.spark.createDataFrame(metrics_rows, METRICS_SCHEMA)
             wh.append_metrics(metrics_df)
             alerts = quality_alerts(metrics_df)
-            n_alerts = alerts.count()
-            if n_alerts:
-                wh.append_alerts(alerts)
+            alert_rows = alerts.collect()
+            n_alerts = len(alert_rows)
+            if alert_rows:
+                wh.append_alerts(
+                    wh.spark.createDataFrame(alert_rows, alerts.schema))
         return {"run_id": run_id,
                 "docs_in": sum(r["docs_in"] for r in metrics_rows),
                 "docs_kept": sum(r["docs_kept"] for r in metrics_rows),

@@ -18,6 +18,18 @@ back transparently to hash-bucketed Parquet: a materialized
 column — the same pruning/co-location semantics Iceberg's bucket transform
 provides. All call sites are engine-agnostic.
 
+Write layout (Parquet fallback): every partitioned write of a pages table
+clusters its rows by ``bucket`` first (a ``rebalance`` hint — the analogue
+of Iceberg's hash distribution mode), so each bucket directory gets ONE
+file per write instead of one per upstream task. Under AQE a bucket larger
+than ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` is split into
+several files, so a hot bucket is not funnelled through one reducer.
+``write_clean`` adds no shuffle: a scan of a clustered table reads each
+bucket file in one task (unless the file exceeds the split size), so its
+tasks already hold whole buckets and the clean write comes out at about
+one file per bucket too. The metrics, alert and audit appends are tiny
+driver-built frames and are written as one file each.
+
 Scale notes: bucket count N is the unit of parallelism for resume and metrics
 (at 10^12 docs choose N ~ 10k-100k so each bucket is a few GB); xxhash64(url)
 decorrelates skewed hosts across buckets (host-level Zipf skew lands evenly).
@@ -93,8 +105,19 @@ class Warehouse:
     def _fqn(self, table: str) -> str:
         return f"{self.catalog}.wh.{table}"
 
+    @staticmethod
+    def _clustered(df: DataFrame) -> DataFrame:
+        """Co-locate each bucket's rows in one shuffle partition (split by
+        AQE only above the advisory partition size) so a partitioned
+        Parquet write emits one file per bucket."""
+        return df.hint("rebalance", "bucket")
+
     def write_pages(self, df: DataFrame, table: str = "pages",
                     mode: str = "overwrite") -> None:
+        """Write a pages table partitioned by ``bucket(url)``. On the
+        Parquet fallback each bucket directory receives one file per call
+        (more only when the bucket exceeds the AQE advisory partition
+        size), for both overwrite and append."""
         if self.use_iceberg:
             self.spark.sql(
                 f"CREATE TABLE IF NOT EXISTS {self._fqn(table)} "
@@ -105,7 +128,8 @@ class Warehouse:
             writer = df.writeTo(self._fqn(table))
             (writer.replace() if mode == "overwrite" else writer.append())
         else:
-            out = df.withColumn("bucket", bucket_expr("url", self.num_buckets))
+            out = self._clustered(
+                df.withColumn("bucket", bucket_expr("url", self.num_buckets)))
             (out.write.mode(mode).partitionBy("bucket")
                 .parquet(self._path(table)))
             self._write_manifest(table, {"num_buckets": self.num_buckets,
@@ -164,7 +188,7 @@ class Warehouse:
                 .overwritePartitions()
         else:
             snap = latest.localCheckpoint(eager=True)
-            (snap.write.mode("overwrite")
+            (self._clustered(snap).write.mode("overwrite")
                  .option("partitionOverwriteMode", "dynamic")
                  .partitionBy("bucket").parquet(self._path(table)))
         return {"affected_buckets": len(affected),
@@ -180,7 +204,9 @@ class Warehouse:
                     run_id: str | None = None) -> None:
         """Idempotent per-bucket append: overwrite the bucket partitions
         being written (dynamic partition overwrite) so a resumed run can
-        rewrite a half-written bucket safely."""
+        rewrite a half-written bucket safely. No shuffle: a frame scanned
+        from a clustered pages table already holds whole buckets per task
+        (see the module docstring)."""
         if self.use_iceberg:
             fqn = self._fqn(table)
             if run_id is None:
@@ -208,6 +234,15 @@ class Warehouse:
 
     # -- metrics / lineage / resume -------------------------------------------
 
+    def _append_one_file(self, df: DataFrame, table: str) -> None:
+        """Parquet append of a tiny driver-built frame (metrics, alerts,
+        audit: at most ``num_buckets`` rows) as ONE file, not one per
+        input partition. ``repartition(1)``, not ``coalesce(1)``: a frame
+        built from Python rows decodes each input partition in a Python
+        worker, and coalescing would run those one after another in a
+        single task (about twice the time of the parallel write)."""
+        df.repartition(1).write.mode("append").parquet(self._path(table))
+
     def append_metrics(self, df: DataFrame) -> None:
         if self.use_iceberg:
             self.spark.sql(
@@ -219,7 +254,7 @@ class Warehouse:
             )
             df.writeTo(self._fqn("metrics")).append()
         else:
-            df.write.mode("append").parquet(self._path("metrics"))
+            self._append_one_file(df, "metrics")
 
     def read_metrics(self) -> DataFrame:
         if self.use_iceberg:
@@ -239,7 +274,7 @@ class Warehouse:
             else:
                 df.writeTo(fqn).append()
         else:
-            df.write.mode("append").parquet(self._path("alerts"))
+            self._append_one_file(df, "alerts")
 
     def read_alerts(self) -> DataFrame:
         if self.use_iceberg:
@@ -257,7 +292,7 @@ class Warehouse:
             else:
                 df.writeTo(fqn).append()
         else:
-            df.write.mode("append").parquet(self._path("audit"))
+            self._append_one_file(df, "audit")
 
     def read_audit(self) -> DataFrame:
         if self.use_iceberg:

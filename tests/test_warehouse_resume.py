@@ -157,3 +157,45 @@ def test_quality_alerts(spark):
     assert 1 not in alerts           # 15% drop rate -> below medium cut
     assert alerts[2]["severity"] == "medium"
     assert '"docs_dropped":95' in alerts[0]["payload"]
+
+
+def test_crash_after_clean_commit_resumes_to_same_output(wh, spark,
+                                                         monkeypatch):
+    """Crash at the commit point the bucket layout depends on: the clean
+    data is committed, the metrics checkpoint is not. The rerun rescores
+    every bucket and its dynamic overwrite replaces each bucket's file, so
+    the table equals an uninterrupted run's and no file of the failed
+    attempt survives."""
+    import os
+
+    cols = ["url", "warc_ts", "lang", "bucket", "text", "reasons_csv"]
+    run_filter(wh, "ref", clean_table="clean_ref")
+    expected = sorted(tuple(r) for r in
+                      wh.read_clean("clean_ref").select(*cols).collect())
+
+    real_append = wh.append_metrics
+    calls = []
+
+    def crash_once(df):
+        calls.append(1)
+        if len(calls) == 1:
+            raise RuntimeError("injected crash after write_clean")
+        real_append(df)
+
+    monkeypatch.setattr(wh, "append_metrics", crash_once)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        run_filter(wh, "crash", clean_table="clean_crash")
+    assert wh.completed_buckets("crash").count() == 0
+
+    summary = run_filter(wh, "crash", clean_table="clean_crash")
+    assert summary["docs_in"] == N
+    got = sorted(tuple(r) for r in
+                 wh.read_clean("clean_crash").select(*cols).collect())
+    assert got == expected
+    table = os.path.join(wh.root, "clean_crash")
+    buckets = [d for d in os.listdir(table) if d.startswith("bucket=")]
+    assert buckets
+    for d in buckets:
+        data = [f for f in os.listdir(os.path.join(table, d))
+                if f.endswith(".parquet")]
+        assert len(data) == 1, (d, data)

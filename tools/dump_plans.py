@@ -94,13 +94,15 @@ def main(sf_dir: str = "/root/testdata/sf0.01") -> str:
         with redirect_stdout(buf):
             df.explain("formatted")
         # strip session-dependent tokens (attribute exprIds #123, AQE
-        # plan_ids, lambda variable ordinals) — they depend on how many
-        # plans the session compiled before, so leaving them in makes
-        # every regeneration a meaningless whole-file diff
+        # plan_ids, lambda variable ordinals, RDD ids of checkpointed
+        # scans) — they depend on how many plans and RDDs the session
+        # built before, so leaving them in makes every regeneration a
+        # meaningless whole-file diff
         plan = buf.getvalue().rstrip()
         plan = re.sub(r"#\d+", "#x", plan)
         plan = re.sub(r"plan_id=\d+", "plan_id=x", plan)
         plan = re.sub(r"lambda x_\d+", "lambda x_n", plan)
+        plan = re.sub(r"RDD\[\d+\]", "RDD[n]", plan)
         out += [f"## {name}", "", f"**Proves:** {claim}", "", "```",
                 plan, "```", ""]
     text = "\n".join(out) + "\n"
